@@ -70,7 +70,7 @@ def _embed_block(texts: pd.Series) -> np.ndarray:
     Each output row is a pure per-row function of its input string (batch
     padding is masked out), so the SAME kernel backs both the stored-vector
     path (hashed_embedding_udf) and the recompute-from-text cos path
-    (pair_cos_from_text_udf) with bit-identical values.
+    (pair_cos_np) with bit-identical values.
 
     Char-level features keep typo'd variants ("fgu coerp" ~ "fagu corp")
     cosine-close where token-level features go to zero — the same property
@@ -123,23 +123,20 @@ def hashed_embedding_udf(texts: pd.Series) -> pd.Series:
     return pd.Series(list(_embed_matrix(texts)))
 
 
-@pandas_udf(DoubleType())
-def pair_cos_from_text_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """dot(embed(a), embed(b)) recomputed from the pair TEXTS — bit-identical
-    to joining stored hashed_embedding_udf vectors and running
-    dot_product_udf (same _embed_matrix float32 rows, same float64 einsum),
-    but with ZERO vector joins: at a 20k-entity catalogue the stored-vector
-    path shuffled two ~100MB (id, vec) tables through two extra exchanges
-    per links run (plan audit r5). In-batch unique-string dedup makes the
-    recompute cheap: pair batches repeat surfaces heavily (<=16 candidates
-    per mention surface; hot entities across mentions), so the kernel runs
-    once per DISTINCT string per batch.
+def pair_cos_np(a: pd.Series, b: pd.Series) -> np.ndarray:
+    """dot(embed(a), embed(b)) per row, recomputed from the pair TEXTS —
+    bit-identical to joining stored hashed_embedding_udf vectors and
+    running dot_product_udf (same _embed_matrix float32 rows, same float64
+    einsum). In-batch unique-string dedup makes the recompute cheap: pair
+    batches repeat surfaces heavily (<=16 candidates per mention surface;
+    hot entities across mentions), so the kernel runs once per DISTINCT
+    string per batch.
 
     Only valid when the score's vectors ARE the hashed text embedding
     (LinkagePipeline's case); external model vectors must keep the join
     path (two_phase_scored_pairs cos_source="join")."""
     if len(a) == 0:
-        return pd.Series([], dtype=float)
+        return np.zeros(0, dtype=np.float64)
     av = a.fillna("").astype(str).to_numpy()
     bv = b.fillna("").astype(str).to_numpy()
     # hash-based dedup (pd.factorize), not np.unique: the sort-based unique
@@ -151,14 +148,7 @@ def pair_cos_from_text_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     inverse, uniq = pd.factorize(np.concatenate([av, bv]), sort=False)
     emb = _embed_matrix(pd.Series(uniq)).astype(np.float64)
     ai, bi = inverse[: len(av)], inverse[len(av):]
-    return pd.Series(np.einsum("ij,ij->i", emb[ai], emb[bi]))
-
-
-# deterministic, but marked nondeterministic for the same reason as
-# jaro_winkler_udf (functions/similarity.py): stop Catalyst from inlining
-# the cos column into downstream Filter conditions (match_edges' threshold
-# filter), which would run the kernel twice over the pair frame.
-pair_cos_from_text_udf = pair_cos_from_text_udf.asNondeterministic()
+    return np.einsum("ij,ij->i", emb[ai], emb[bi])
 
 
 @pandas_udf(DoubleType())

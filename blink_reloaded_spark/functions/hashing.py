@@ -254,18 +254,6 @@ def minhash_band_keys_exploded(
     return band_keys_from_sig_table(sig, bands, rows, carry_cols=carry_cols)
 
 
-def minhash_signatures_exploded(
-    df, id_col: str, shingles: Column, num_hashes: int, hash_fn=None
-):
-    """Full MinHash signature per id: returns (id, sig: array<long>).
-    Companion of `minhash_band_keys_exploded`; same arithmetic as
-    `minhash_signature_cols` (pinned by test)."""
-    return sig_array_from_sig_table(
-        minhash_sig_table(df, id_col, shingles, num_hashes, hash_fn=hash_fn),
-        num_hashes,
-    )
-
-
 def minhash_sigs_np_udf(k: int, num_hashes: int):
     """Factory: pandas UDF computing the MinHash signature array (length
     `num_hashes`) over the k-char shingles of an ALREADY-NORMALIZED string
@@ -278,9 +266,10 @@ def minhash_sigs_np_udf(k: int, num_hashes: int):
     sig tier: 1.78 s wall / 11.3 CPU-s → one map pass).
 
     Exactness argument (parity pinned by tests/test_functions.py):
-    * poly_hash applies ``% P`` per char, but char codes < 2^21 and k <= 5
-      keep the un-reduced Horner value < 2^42, so one final ``% P`` is the
-      same residue — all int64, no float anywhere;
+    * poly_hash applies ``% P`` per char, but char codes < 2^21 and k <= 9
+      keep the un-reduced Horner value < 2^21 * 31^k / 30 < 2^61, so one
+      final ``% P`` is the same residue — all int64, no float anywhere
+      (k >= 10 can overflow int64 and raises ValueError);
     * perm_hash is (a*h + b) % P with a, h < P < 2^31 → a*h < 2^62, exact
       in int64;
     * duplicate shingles cannot change a min, so array_distinct is
@@ -292,7 +281,21 @@ def minhash_sigs_np_udf(k: int, num_hashes: int):
     NULL inputs must be filtered by the caller (the explode path drops
     ids with a NULL shingle array; ``.where(col.isNotNull())`` preserves
     that contract).
+
+    Raises ValueError outside the proven range: k not in [1, 9], or
+    num_hashes above len(PERMS) (the signature columns past the permutation
+    table would be left uninitialized).
     """
+    if not 1 <= k <= 9:
+        raise ValueError(
+            f"minhash_sigs_np_udf: k={k} outside [1, 9]; the one-final-%P "
+            "Horner hash is exact in int64 only up to k=9"
+        )
+    if not 1 <= num_hashes <= len(PERMS):
+        raise ValueError(
+            f"minhash_sigs_np_udf: num_hashes={num_hashes} outside "
+            f"[1, {len(PERMS)}] (len(PERMS))"
+        )
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf

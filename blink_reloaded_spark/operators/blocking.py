@@ -275,14 +275,15 @@ def mention_entity_candidates(
         e = e.join(ok, "block_key", "left_semi")
     if max_candidates_per_mention is None:
         # repartition("a") + dropDuplicates instead of a bare distinct (r8):
-        # the same ONE exchange (hash(a) satisfies the (a, b) dedup's
-        # clustering requirement), but user-specified partitioning is not
-        # AQE-coalesced — a bare distinct's output collapsed to ONE
-        # post-shuffle partition at small-catalogue sizes, and the links
-        # stage (which trusts the candidates checkpoint's layout via
-        # assume_partitioned) then ran its scorer UDFs single-task.
-        # Downstream consumers inherit hash(a) at session width, exactly
-        # the distribution link_best's groupBy("a") wants.
+        # the same ONE exchange, and hash(a) satisfies the (a, b) dedup's
+        # clustering requirement AND is the layout the links stage trusts
+        # (assume_partitioned) and link_best's groupBy("a") wants.
+        # repartition("a") without a count is REPARTITION_BY_COL, which
+        # AQE coalesces like any shuffle: at small sizes the output is
+        # ONE partition (the candidates checkpoint then reads back as one
+        # AQEShuffleRead-coalesced split) and the scorer UDFs run as one
+        # task — the cheaper shape there, since each Python task has a
+        # fixed start cost; larger inputs keep more partitions.
         return (
             m.join(e, "block_key")
             .select("a", "b")

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -79,41 +80,42 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def star_components(edges: DataFrame, leaf: str = "src", hub: str = "dst") -> DataFrame:
+def star_components(edges: DataFrame, hub: str, label: str) -> DataFrame:
     """Connected components of a graph KNOWN to be a union of stars: every
-    `leaf` node has exactly one edge, to its `hub`. Then components are
-    exactly the hub-groups, and the generic log-round CC loop collapses to
-    ONE aggregation + one join — no driver-side iterations at all.
+    leaf has exactly one edge (one row of `edges`), to its `hub`. Then
+    components are exactly the hub-groups, and the generic log-round CC
+    loop collapses to ONE window — no driver-side iterations, no join.
 
     This is the KB-linking case (pipeline.run): `link_best` emits at most one
     argmax entity per surface, so the surface->entity edge set is a star
     forest by construction. The precondition (one edge per leaf) is the
-    caller's invariant; component ids are canonicalized to the component
-    minimum, same as connected_components.
+    caller's invariant.
+
+    Returns the edge rows themselves, each with component = min(label) over
+    its hub's star. `label` is a per-leaf attribute (pipeline.run: the
+    surface's min mention id), so the component id is canonical under
+    partitioning and row order; the hub is not an output node.
     """
-    cmin = edges.groupBy(hub).agg(F.min(leaf).alias("_mn")).select(
-        hub, F.least(F.col("_mn"), F.col(hub)).alias("component")
+    return edges.withColumn(
+        "component", F.min(label).over(Window.partitionBy(hub))
     )
-    leaves = edges.join(cmin, hub).select(
-        F.col(leaf).alias("node"), "component"
-    )
-    hubs = cmin.select(F.col(hub).alias("node"), "component")
-    return leaves.union(hubs)
 
 
-# Local-CC gate (r8): when the canonical edge set is small enough that the
-# iteration parallelism sizing (below) lands on ONE partition, the log-round
-# loop degenerates into pure serial job latency — each round is a full job of
-# single-partition shuffles plus a driver barrier, and a ~2k-edge graph pays
-# ~4 such rounds (measured: er04's CC tail was ~2.4s of its 3.4s wall for a
-# 2k-edge graph). A single-partition graph is by definition one task's worth
-# of data, so compute its components IN that one task: a mapInPandas
-# union-find over the already-coalesced edge partition — one job, no rounds,
-# no driver loop over rows. The distributed log-round loop is untouched for
-# any graph the sizing spreads over >1 partition (the 100TB path).
-# The cap is a memory guard on the one task (~32B/edge in the dict), far
-# above the 50k-edges/partition sizing that actually triggers the path.
-LOCAL_CC_MAX_EDGES = 2_000_000
+# Iteration parallelism sizing: one shuffle partition per this many canonical
+# edges (capped at the session's default parallelism).
+#
+# Local-CC gate (r8): a graph below this size is one task's worth of data, and
+# the log-round loop on it degenerates into pure serial job latency — each
+# round is a full job of single-partition shuffles plus a driver barrier, and
+# a ~2k-edge graph pays ~4 such rounds (measured: er04's CC tail was ~2.4s of
+# its 3.4s wall for a 2k-edge graph). So compute its components IN one task:
+# a mapInPandas union-find over the coalesced edge frame — one job, no
+# rounds, no driver loop over rows. The gate is the edge count itself, not
+# the derived partition count: at defaultParallelism=1 every graph sizes to
+# one partition, and a multi-million-edge union-find dict would sit in one
+# Python worker. Larger graphs take the distributed log-round loop (the
+# 100TB path).
+EDGES_PER_PARTITION = 50_000
 
 
 def _local_components(e: DataFrame) -> DataFrame:
@@ -185,6 +187,9 @@ def connected_components(
     edges : DataFrame(src: long, dst: long)
     nodes : optional DataFrame(node: long) — include isolated nodes as
         singleton components.
+    num_partitions : None sizes from the edge count (one-task union-find
+        below EDGES_PER_PARTITION edges); a number always runs the
+        distributed log-round loop at that width.
 
     Returns DataFrame(node: long, component: long) with
     component = min(node id in the component).
@@ -209,18 +214,18 @@ def connected_components(
     prev = _checksum(e)
     n_edges = prev[0]
     if num_partitions is None:
+        if n_edges < EDGES_PER_PARTITION:
+            # small graph: single-task union-find, no round loop (see
+            # EDGES_PER_PARTITION note). Output contract identical.
+            return _with_singletons(_local_components(e), nodes)
         # size the iteration parallelism to the graph, not the session: each
         # round is several shuffles of the (shrinking) edge set — running a
         # 200-edge surface graph at 32 shuffle partitions is pure task
         # overhead, while a 10^10-edge graph wants the full width
-        num_partitions = max(1, min(int(n_edges / 50_000) + 1,
+        num_partitions = max(1, min(n_edges // EDGES_PER_PARTITION + 1,
                                     e.sparkSession.sparkContext.defaultParallelism))
     if e.rdd.getNumPartitions() > num_partitions:
         e = e.coalesce(num_partitions)
-    if num_partitions == 1 and n_edges <= LOCAL_CC_MAX_EDGES:
-        # one-partition graph: single-task union-find, no round loop (see
-        # LOCAL_CC_MAX_EDGES note). Output contract identical.
-        return _with_singletons(_local_components(e), nodes)
     spark = e.sparkSession
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(num_partitions))

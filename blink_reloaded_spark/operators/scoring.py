@@ -15,12 +15,17 @@ SURVEY.md §7.3e). Threshold -> match edges.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType, StructField, StructType
 
-from blink_reloaded_spark.functions.embedding import dot_product_udf
+from blink_reloaded_spark.functions.embedding import dot_product_udf, pair_cos_np
 from blink_reloaded_spark.functions.similarity import (
     jaccard_from_counts,
+    jaro_winkler_np,
     jaro_winkler_udf,
     levenshtein_sim,
 )
@@ -39,6 +44,11 @@ DEFAULT_THRESHOLD = 0.60
 # 2 * 5e-7), doubled again for comfort — selectivity cost is nil.
 COS_MAX = 1.000001
 _PRUNE_SLACK = 2e-6
+# widening of the fused kernel's cos mask below the JVM prune bound: the
+# Python cheap score repeats the JVM's double arithmetic operation for
+# operation, so the mask already equals the filter; the slack only keeps it
+# a superset should an evaluation order ever differ by an ulp
+_MASK_SLACK = 1e-9
 
 
 def _cos_col(a_vec: str, b_vec: str) -> F.Column:
@@ -70,9 +80,12 @@ def pair_features(
     b_text: str = "b_text",
     a_toks: str | None = None,
     b_toks: str | None = None,
+    jw: bool = True,
 ) -> DataFrame:
     """Append the CHEAP (text-only) feature columns: jw, lev_sim, jacc,
-    overlap. No vectors touched — this is phase 1 of the two-phase scorer."""
+    overlap. No vectors touched — this is phase 1 of the two-phase scorer.
+    jw=False leaves out the JW UDF column (the fused jw_cos_udf supplies
+    it)."""
     ta = F.col(a_toks) if a_toks else tokens(F.col(a_text))
     tb = F.col(b_toks) if b_toks else tokens(F.col(b_text))
     n_inter = F.size(F.array_intersect(ta, tb))
@@ -80,12 +93,55 @@ def pair_features(
         n_inter / F.greatest(F.least(F.size(ta), F.size(tb)), F.lit(1)).cast("double"),
         6,
     )
+    if jw:
+        pairs = pairs.withColumn(
+            "jw", jaro_winkler_udf(F.col(a_text), F.col(b_text))
+        )
     return (
-        pairs.withColumn("jw", jaro_winkler_udf(F.col(a_text), F.col(b_text)))
-        .withColumn("lev_sim", levenshtein_sim(F.col(a_text), F.col(b_text)))
+        pairs.withColumn("lev_sim", levenshtein_sim(F.col(a_text), F.col(b_text)))
         .withColumn("jacc", jaccard_from_counts(n_inter, F.size(ta), F.size(tb)))
         .withColumn("overlap", overlap)
     )
+
+
+def jw_cos_np(
+    a: pd.Series, b: pd.Series, lev: np.ndarray, ovl: np.ndarray, lo: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """The fused scorer kernel: (jw, raw cos) per pair. jw is
+    round(jaro_winkler_np, 6) on every row, as jaro_winkler_udf returns it;
+    cos is pair_cos_np (unrounded, unclamped) on the rows whose cheap score
+    jw*W_JW + lev*W_LEV + ovl*W_OVL reaches `lo`, NaN elsewhere. With `lo`
+    the two-phase prune bound, the computed rows are a superset of the
+    prune survivors, so the embedding kernel runs on survivors only."""
+    jw = np.round(jaro_winkler_np(a, b), 6)
+    cheap = jw * W_JW + lev * W_LEV + ovl * W_OVL
+    hit = np.flatnonzero(cheap >= lo - _MASK_SLACK)
+    cos = np.full(len(jw), np.nan)
+    if len(hit):
+        cos[hit] = pair_cos_np(a.iloc[hit], b.iloc[hit])
+    return jw, cos
+
+
+_JW_COS = StructType(
+    [StructField("jw", DoubleType()), StructField("cos", DoubleType())]
+)
+
+
+def jw_cos_udf(lo: float):
+    """jw_cos_np as ONE pandas UDF column struct<jw, cos> over (a_text,
+    b_text, lev_sim, overlap): the pair texts cross the Arrow boundary once
+    instead of once for JW and again for the cos of the survivors. Marked
+    nondeterministic like jaro_winkler_udf, so Catalyst never inlines the
+    struct into the prune filter and the kernel runs once per pair."""
+
+    @pandas_udf(_JW_COS)
+    def _jw_cos(
+        a: pd.Series, b: pd.Series, lev: pd.Series, ovl: pd.Series
+    ) -> pd.DataFrame:
+        jw, cos = jw_cos_np(a, b, lev.to_numpy(), ovl.to_numpy(), lo)
+        return pd.DataFrame({"jw": jw, "cos": cos})
+
+    return _jw_cos.asNondeterministic()
 
 
 def score_pairs(
@@ -130,6 +186,7 @@ def two_phase_scored_pairs(
     vec_join: str | None = None,
     cos_source: str = "join",
     assume_partitioned: bool = False,
+    carry: list[str] | None = None,
 ) -> DataFrame:
     """Score candidate pairs WITHOUT shipping the embedding vectors through
     the pair shuffle (VERDICT r2 #1: at a 20k-entity catalogue the old plan
@@ -155,11 +212,12 @@ def two_phase_scored_pairs(
     A pair can only reach `threshold` if cheap >= threshold - W_COS*COS_MAX,
     and (argmax_prune) can only be its mention's argmax if
     cheap >= max_cheap(a) - W_COS*COS_MAX (the current cheap-max is a lower
-    bound on the group's best full score). Survivors then join `vec` BY ID
-    (tiny row count) and get the exact full score.
+    bound on the group's best full score). Survivors then get cos and the
+    exact full score.
 
-    Returns (a, b, jw, lev_sim, jacc, overlap, cos, score) with `score`
-    bit-identical to score_pairs on every surviving pair. Guarantee by mode:
+    Returns (a, b, a_text, b_text, jw, lev_sim, jacc, overlap, cos, score,
+    *a_<carry>) with `score` bit-identical to score_pairs on every
+    surviving pair. Guarantee by mode:
     * argmax_prune=False — superset of {pairs with full score >= threshold},
       so BOTH `match_edges(out, threshold)` AND `link_best(out, threshold)`
       equal the unpruned plan exactly (a pruned pair has full < threshold,
@@ -176,7 +234,9 @@ def two_phase_scored_pairs(
     Both modes pinned by tests/test_pipeline.py::test_two_phase_scoring_parity.
 
     `a_nodes`/`b_nodes`: (id, text, tk, vec); b_nodes=None reuses a_nodes
-    (self-join case). `repartition_to` rebalances the text-pair frame
+    (self-join case). `carry`: further a_nodes columns, returned as
+    a_<col> (the pipeline carries surf_min to its cluster tail this way).
+    `repartition_to` rebalances the text-pair frame
     round-robin before the feature UDFs; default None — the join chain
     already spreads pair rows by hash(b) then hash(a), per-key row counts
     are bounded upstream (top-k budget / max_block), and the extra
@@ -187,26 +247,33 @@ def two_phase_scored_pairs(
     latency was its shuffle-stage boundaries): "join" ships the stored
     `vec` columns to survivors through two id joins (the general path —
     works for ANY vectors, e.g. real model embeddings); "recompute"
-    re-derives cos from the surviving pair's TEXTS via
-    embedding.pair_cos_from_text_udf — bit-identical scores when `vec` IS
-    the hashed text embedding (the pipeline's case; parity pinned by
+    re-derives cos from the pair TEXTS — bit-identical scores when `vec`
+    IS the hashed text embedding (the pipeline's case; parity pinned by
     tests/test_pipeline.py::test_cos_recompute_parity) and removes BOTH
     vector joins and their four exchanges; a_nodes/b_nodes then don't need
-    a `vec` column at all. At 10^12 turns "recompute" is also the right
-    cluster shape for hashed embeddings: the join path shuffles two
-    |surfaces|-row ~1KB/row vec tables per run, the recompute path does a
-    numpy pass over survivor texts with in-batch distinct-string dedup.
+    a `vec` column at all. The recompute path runs ONE pandas UDF
+    (jw_cos_udf): it returns jw for every pair and the raw cos for the
+    pairs whose cheap score passes the threshold prune bound — a superset
+    of the survivors of the JVM filter, which still decides them (for
+    argmax_prune too: its bound is never below the threshold bound). The
+    rounding and the clamp of cos stay JVM-side. At 10^12 turns
+    "recompute" is also the right cluster shape for hashed embeddings: the
+    join path shuffles two |surfaces|-row ~1KB/row vec tables per run, the
+    recompute path does a numpy pass over survivor texts with in-batch
+    distinct-string dedup.
 
     `assume_partitioned` (r5): skip the initial repartition("a") when the
-    caller KNOWS `cands` is already physically hash(a)-partitioned with
-    adequate parallelism (the pipeline's candidates stage ends in exactly
-    that layout and localCheckpoint preserves physical partitions) — the
-    repartition would be a redundant full exchange of the pair frame. The
-    planner has forgotten the layout (ExistingRDD), so anything requiring
-    hash(a) downstream still inserts its own exchange — but in recompute
-    mode only the post-aggregation skinny frame ever needs one. Leave
-    False for inputs read from parquet (a ~12MB checkpoint reads back as
-    ONE split — serial UDFs).
+    caller KNOWS `cands` is already physically hash(a)-partitioned (the
+    pipeline's candidates stage ends in that layout and localCheckpoint
+    preserves physical partitions) — the repartition would be a redundant
+    full exchange of the pair frame. The scorer then runs at the input's
+    partition count, whatever AQE coalesced the candidates shuffle to: one
+    partition at small sizes, which is the cheaper shape there (each
+    Python UDF task has a fixed start cost). The planner has forgotten the
+    layout (ExistingRDD), so anything requiring hash(a) downstream still
+    inserts its own exchange — but in recompute mode only the
+    post-aggregation skinny frame ever needs one. Leave False for inputs
+    without a known hash(a) layout, e.g. a parquet checkpoint re-read.
 
     PLAN SHAPE (VERDICT r3 #1a — every exchange here is a shuffle-stage
     boundary of serial driver/AQE latency, so the chain is ordered to
@@ -216,15 +283,18 @@ def two_phase_scored_pairs(
     b_vec) and leaves the frame partitioned by a -> link_best's groupBy(a)
     and the pipeline's surface-text join run exchange-free on top. In
     cos_source="recompute" mode the chain is flat: texts join (broadcast
-    for bounded dims) -> feature UDFs -> prune filter -> cos UDF -> score,
-    no pair exchange at all.
+    for bounded dims) -> fused jw/cos UDF -> prune filter -> score, no
+    pair exchange at all.
     """
     if cos_source not in ("join", "recompute"):
         raise ValueError(f"cos_source must be 'join' or 'recompute': {cos_source}")
     if b_nodes is None:
         b_nodes = a_nodes
+    carried = [f"a_{c}" for c in carry or []]
     na_t = a_nodes.select(
-        F.col("id").alias("a"), F.col("text").alias("a_text"), F.col("tk").alias("a_tk")
+        F.col("id").alias("a"), F.col("text").alias("a_text"),
+        F.col("tk").alias("a_tk"),
+        *[F.col(c).alias(f"a_{c}") for c in carry or []],
     )
     nb_t = b_nodes.select(
         F.col("id").alias("b"), F.col("text").alias("b_text"), F.col("tk").alias("b_tk")
@@ -241,11 +311,18 @@ def two_phase_scored_pairs(
     tp = tp.join(na_t, "a").join(nb_t, "b")
     if repartition_to:
         tp = tp.repartition(repartition_to)
-    feats = pair_features(tp, a_toks="a_tk", b_toks="b_tk").withColumn(
+    margin = W_COS * COS_MAX + _PRUNE_SLACK
+    recompute = cos_source == "recompute"
+    feats = pair_features(tp, a_toks="a_tk", b_toks="b_tk", jw=not recompute)
+    if recompute:
+        jc = jw_cos_udf(float(threshold) - margin)(
+            F.col("a_text"), F.col("b_text"), F.col("lev_sim"), F.col("overlap")
+        )
+        feats = feats.withColumn("__jc", jc).withColumn("jw", F.col("__jc.jw"))
+    feats = feats.withColumn(
         "cheap",
         F.col("jw") * W_JW + F.col("lev_sim") * W_LEV + F.col("overlap") * W_OVL,
     )
-    margin = W_COS * COS_MAX + _PRUNE_SLACK
     bound = F.lit(float(threshold))
     if argmax_prune:
         # per-`a` cheap max via a WINDOW, not groupBy+join-back: the feats
@@ -261,27 +338,23 @@ def two_phase_scored_pairs(
             "__mxc", F.max("cheap").over(Window.partitionBy("a"))
         )
         bound = F.greatest(F.col("__mxc"), bound)
-    survivors = feats.where(F.col("cheap") >= bound - F.lit(margin)).select(
-        "a", "b", "a_text", "b_text", "jw", "lev_sim", "jacc", "overlap"
+    survivors = feats.where(F.col("cheap") >= bound - F.lit(margin))
+    out_cols = [
+        "a", "b", "a_text", "b_text", "jw", "lev_sim", "jacc", "overlap",
+        "cos", "score", *carried,
+    ]
+    if recompute:
+        # clamp at 0 and round to 6dp as _cos_col does for stored vectors
+        cos = F.greatest(F.round(F.col("__jc.cos"), 6), F.lit(0.0))
+        return (
+            survivors.withColumn("cos", cos)
+            .withColumn("score", _full_score_col())
+            .select(*out_cols)
+        )
+    survivors = survivors.select(
+        "a", "b", "a_text", "b_text", "jw", "lev_sim", "jacc", "overlap",
+        *carried,
     )
-    if cos_source == "recompute":
-        from blink_reloaded_spark.functions.embedding import (
-            pair_cos_from_text_udf,
-        )
-
-        scored = survivors.withColumn(
-            "cos",
-            F.greatest(
-                F.round(
-                    pair_cos_from_text_udf(F.col("a_text"), F.col("b_text")), 6
-                ),
-                F.lit(0.0),
-            ),
-        ).withColumn("score", _full_score_col())
-        return scored.select(
-            "a", "b", "a_text", "b_text", "jw", "lev_sim", "jacc", "overlap",
-            "cos", "score",
-        )
     va = a_nodes.select(F.col("id").alias("a"), F.col("vec").alias("a_vec"))
     vb = b_nodes.select(F.col("id").alias("b"), F.col("vec").alias("b_vec"))
     # b-vec first (survivors are already partitioned by b when
@@ -304,9 +377,7 @@ def two_phase_scored_pairs(
         .withColumn("cos", _cos_col("a_vec", "b_vec"))
         .withColumn("score", _full_score_col())
     )
-    return scored.select(
-        "a", "b", "a_text", "b_text", "jw", "lev_sim", "jacc", "overlap", "cos", "score"
-    )
+    return scored.select(*out_cols)
 
 
 def match_edges(scored: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> DataFrame:

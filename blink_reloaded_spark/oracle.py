@@ -56,19 +56,6 @@ def sql_minhash(e_shingles: str, i: int) -> str:
     )
 
 
-def sql_band_key(e_shingles: str, band: int, rows: int) -> str:
-    """Mirror of hashing.band_keys entry `band`."""
-    parts = ", ".join(
-        f"CAST({sql_minhash(e_shingles, band * rows + r)} AS VARCHAR)"
-        for r in range(rows)
-    )
-    if rows == 1:
-        joined = parts
-    else:
-        joined = f"concat_ws('_', {parts})"
-    return f"concat('{band}', '|', {joined})"
-
-
 def sql_simhash(e_tokens: str, nbits: int = 32) -> str:
     """Mirror of hashing.simhash64 (portable variant)."""
     hashes = f"list_transform({e_tokens}, s -> {sql_poly_hash('s')})"

@@ -4,9 +4,13 @@ idempotent checkpointed job:
   1. mentions    — token-hash dictionary extraction from transcripts (U1)
   2. surfaces    — dedup to DISTINCT surfaces + hashed trigram encoding (U2/U3)
   3. candidates  — LSH blocking keys; surface⋈entity equi-join (J7/J8)
-  4. links       — Arrow-batched pair scorer -> per-surface argmax link (U4/W4)
-  5. clusters    — large-star/small-star connected components on the surface
-                   graph; linear expansion back to mentions
+  4. links       — one fused Arrow-batched scorer UDF (jw + survivor cos) ->
+                   per-surface argmax link carrying the surface text and
+                   its min mention id (U4/W4)
+  5. clusters    — the link graph is a star forest (one entity per linked
+                   surface), so a component is one entity's star: one
+                   window over the links labels each surface with the
+                   star's min mention id; one join back onto mentions
 
 Mirrors the reference's DAG (`examples/zeshel/README.md:11-38`, SURVEY.md
 §3.3): retrieval bounds the candidate set (O2), the cross-encoder scores
@@ -198,6 +202,51 @@ class LinkagePipeline:
         params.update(overrides)
         return cls(spark, **params)
 
+    def build_surfaces_from(
+        self, mentions: DataFrame, entities: DataFrame
+    ) -> DataFrame:
+        """The surfaces node table (id, text, is_mention, surf_min, tk[,
+        vec]) from (mention_id, mention) rows and the entity catalogue:
+        distinct mention surfaces plus entity titles. Public so the stage
+        can be timed/driven in isolation.
+
+        ONE grouped pass over the mention set (r8): the dedup to distinct
+        surfaces and the per-surface min mention id (surf_min, needed later
+        for cluster-id canonicalization) share the same groupBy(mention).
+        surf_min is NULL on entity rows."""
+        ment_surf = (
+            mentions.groupBy("mention")
+            .agg(F.min("mention_id").alias("surf_min"))
+            .select(
+                F.xxhash64(F.lit("surf"), "mention").alias("id"),
+                F.col("mention").alias("text"),
+                F.lit(True).alias("is_mention"),
+                "surf_min",
+            )
+        )
+        ent_surf = entities.select(
+            (F.lit(ENTITY_ID_OFFSET) - F.col("entity_id")).alias("id"),
+            F.lower(F.col("title")).alias("text"),
+            F.lit(False).alias("is_mention"),
+            # type follows the mention id (long, or string in id_bits=128
+            # mode — a hard "long" cast here corrupted the union's column
+            # type for 128-bit ids)
+            F.lit(None)
+            .cast(mentions.schema["mention_id"].dataType)
+            .alias("surf_min"),
+        )
+        both = ment_surf.unionByName(ent_surf)
+        # tokenize ONCE per distinct surface; the scorer otherwise re-runs
+        # the normalize regex several times per candidate PAIR. Stored
+        # vectors only exist on the join cos path — in recompute mode
+        # (default) the scorer derives cos from pair texts, so the surfaces
+        # stage skips the embedding UDF pass entirely and the checkpoint
+        # drops ~1KB/row.
+        both = both.withColumn("tk", tokens(F.col("text")))
+        if self.cos_source == "join":
+            both = both.withColumn("vec", hashed_embedding_udf(F.col("text")))
+        return both
+
     def build_candidates_from(self, surfaces_t: DataFrame) -> DataFrame:
         """Candidate (mention-surface, entity) pairs from a MATERIALIZED
         surfaces node table (id, text, is_mention, ...): blocking keys ->
@@ -206,20 +255,23 @@ class LinkagePipeline:
 
         Both sides are keyed in ONE pass (carry_cols=["is_mention"] rides
         the flag through the MinHash groupBy) and the combined skinny key
-        table is materialized ONCE — one keying job + one barrier instead
-        of two serial per-side ones, and the purge's two consumers of each
-        key table never recompute the keying subtree."""
+        table is ALWAYS materialized once: the is_mention / NOT is_mention
+        split (and the purge's sizing, when on) are several consumers of
+        it, and unmaterialized each would re-run the keying subtree's
+        shuffle stages."""
         keyed = surfaces_t.withColumn("prefix_key", _prefix_key("text"))
         hf = self._blocking_hash()
-        keys_all = blocking_keys(
-            keyed,
-            id_col="id", text_col="text", bands=self.bands, rows=self.rows,
-            shingle_k=self.shingle_k, extra_key_cols=["prefix_key"],
-            hash_fn=hf, carry_cols=["is_mention"],
+        keys_all = self._materialize(
+            blocking_keys(
+                keyed,
+                id_col="id", text_col="text", bands=self.bands,
+                rows=self.rows, shingle_k=self.shingle_k,
+                extra_key_cols=["prefix_key"], hash_fn=hf,
+                carry_cols=["is_mention"],
+            )
         )
         ok = None
         if self.max_entity_block is not None or self.max_key_pairs is not None:
-            keys_all = self._materialize(keys_all)
             # one-pass purge sizing over the flagged union (r5): both sides'
             # per-key counts from a single conditional aggregation,
             # materialized once for its two semi-join consumers
@@ -246,19 +298,22 @@ class LinkagePipeline:
         surfaces_t: DataFrame,
         assume_partitioned: bool = False,
     ) -> DataFrame:
-        """Surface->entity argmax links from materialized candidate pairs +
-        the surfaces node table: two-phase scoring -> threshold argmax.
-        Public for isolated stage timing.
+        """Surface->entity argmax links (a, b, score, surf_text, surf_min)
+        from materialized candidate pairs + the surfaces node table (which
+        carries surf_min, the per-surface min mention id): two-phase scoring
+        -> threshold argmax. Public for isolated stage timing.
 
         r5 chain shape (VERDICT r4 #4 — the links chain NEGATIVE-scaled
         because its work had shrunk to seconds while ~6 shuffle-stage
         boundaries of serial driver/AQE latency remained): the surface text
-        rides the scorer output (a_text) through link_best's max struct, so
-        the old re-attachment join is gone; cos_source="recompute" (default)
-        removes both vector joins; assume_partitioned=True (set by run()
-        when the candidates checkpoint preserved its hash(a) layout) skips
-        the redundant repartition. Net: ONE skinny post-aggregation
-        exchange where there were six.
+        and surf_min ride the scorer output (a_text, a_surf_min) through
+        link_best's max struct, so no re-attachment join is needed, here or
+        in the cluster tail; cos_source="recompute" (default) removes both
+        vector joins; assume_partitioned=True (set by run() when the
+        candidates checkpoint preserved its hash(a) layout) skips the
+        redundant repartition and scores at the checkpoint's partition
+        count, which AQE may have coalesced (one partition at small sizes).
+        Net: ONE skinny post-aggregation exchange where there were six.
 
         No round-robin rebalance of the pair frame: per-`a` candidate
         counts are bounded by the top-k budget, so hash(a) spreads the work
@@ -271,10 +326,15 @@ class LinkagePipeline:
             vec_join=self.vec_join,
             cos_source=self.cos_source,
             assume_partitioned=assume_partitioned,
+            carry=["surf_min"],
         )
-        best = link_best(scored, self.threshold, carry=["a_text"])
+        best = link_best(scored, self.threshold, carry=["a_text", "a_surf_min"])
         return best.select(
-            "a", "b", "score", F.col("a_text").alias("surf_text")
+            "a",
+            "b",
+            "score",
+            F.col("a_text").alias("surf_text"),
+            F.col("a_surf_min").alias("surf_min"),
         )
 
     def _fingerprint(self, surfaces: list[str] | None) -> str:
@@ -297,9 +357,10 @@ class LinkagePipeline:
                 # schema-affecting: a surfaces checkpoint written without
                 # stored vectors must not be resumed by a join-mode run
                 "cos_source": self.cos_source,
-                # r8: surfaces checkpoint carries surf_min — a pre-r8
-                # checkpoint dir must not resume into this code
-                "surfaces_schema": 2,
+                # 2: the surfaces checkpoint carries surf_min; 3: so does
+                # the links checkpoint — an older checkpoint dir must not
+                # resume into this code
+                "surfaces_schema": 3,
                 "blocking_hash": getattr(
                     self._blocking_hash(), "__name__", "custom"
                 ),
@@ -418,46 +479,7 @@ class LinkagePipeline:
         # 10^12 turns this collapses the heavy stages by orders of magnitude;
         # it is also the first skew fix: the hottest surface becomes ONE row.
         def build_surfaces() -> DataFrame:
-            # ONE grouped pass over the mention set (r8): the dedup to
-            # distinct surfaces and the per-surface min mention id (needed
-            # later for cluster-id canonicalization) share the same
-            # groupBy(mention) — the old shape aggregated the corpus-sized
-            # mention frame twice (distinct here, min in the clusters
-            # stage). surf_min is NULL on entity rows.
-            ment_surf = (
-                m_slim.groupBy("mention")
-                .agg(F.min("mention_id").alias("surf_min"))
-                .select(
-                    F.xxhash64(F.lit("surf"), "mention").alias("id"),
-                    F.col("mention").alias("text"),
-                    F.lit(True).alias("is_mention"),
-                    "surf_min",
-                )
-            )
-            ent_surf = entities.select(
-                (F.lit(ENTITY_ID_OFFSET) - F.col("entity_id")).alias("id"),
-                F.lower(F.col("title")).alias("text"),
-                F.lit(False).alias("is_mention"),
-                # type follows the mention id (long, or string in
-                # id_bits=128 mode — a hard "long" cast here corrupted the
-                # union's column type for 128-bit ids)
-                F.lit(None)
-                .cast(m_slim.schema["mention_id"].dataType)
-                .alias("surf_min"),
-            )
-            both = ment_surf.unionByName(ent_surf)
-            # tokenize ONCE per distinct surface; the scorer otherwise
-            # re-runs the normalize regex several times per candidate PAIR.
-            # Stored vectors only exist on the join cos path — in recompute
-            # mode (default) the scorer derives cos from pair texts, so the
-            # surfaces stage skips the embedding UDF pass entirely and the
-            # checkpoint drops ~1KB/row.
-            both = both.withColumn("tk", tokens(F.col("text")))
-            if self.cos_source == "join":
-                both = both.withColumn(
-                    "vec", hashed_embedding_udf(F.col("text"))
-                )
-            return both
+            return self.build_surfaces_from(m_slim, entities)
 
         surfaces_t = stage("surfaces", build_surfaces, inputs=["mentions", "entities"])
         count_metric("distinct_surfaces", surfaces_t)
@@ -488,9 +510,11 @@ class LinkagePipeline:
             # by default, or joined by id in cos_source="join" mode — never
             # ~2KB of vectors per pair through the candidate shuffle).
             # assume_partitioned: the localCheckpoint candidates stage ends
-            # hash(a)-partitioned and keeps its physical layout; a parquet/
-            # Iceberg checkpoint re-read does not (and may read back as one
-            # split), so only the in-memory path skips the repartition.
+            # hash(a)-partitioned and keeps its physical layout — at the
+            # partition count AQE coalesced that shuffle to (one partition
+            # at small sizes, where one Python task is cheaper than several);
+            # a parquet/Iceberg checkpoint re-read has no known layout, so
+            # only the in-memory path skips the repartition.
             return self.build_links_from(
                 cands, surfaces_t, assume_partitioned=ckpt is None
             )
@@ -503,49 +527,20 @@ class LinkagePipeline:
             # CC runs on the SURFACE graph (surface -> entity link edges) —
             # provably equivalent to mention-level closure: mentions of the
             # same linked surface connect through the entity anchor, and
-            # mentions of unlinked surfaces have no edges (singletons). The
-            # expansion to mentions is one broadcast join + one groupBy —
-            # mention-level cost is two linear shuffles, never log-rounds of
-            # 10^12-edge CC iterations.
-            edges = links.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-            # nodes=None: only LINKED surfaces get components — mentions of
-            # unlinked surfaces must stay singletons (FIXTURES F5: NIL
-            # mentions are singletons, the reference's no-prediction case).
-            # The graph is a star forest by construction (link_best emits at
-            # most ONE entity per surface), so components collapse to one
-            # aggregation — no log-round CC loop (star_components docstring)
-            comps = star_components(edges)
-            # map components back through MENTION surfaces only: an exact
-            # alias equals the entity title, so joining through all
-            # surfaces_t rows would duplicate those mentions
-            # cluster_id = min mention id per component, with ZERO extra
-            # passes over the mention set: min-per-component = min over the
-            # component's surfaces of min-per-surface, and the per-surface
-            # min already rides the surfaces checkpoint (surf_min, computed
-            # in the same groupBy that deduplicates surfaces — r8; the r7
-            # shape re-aggregated the corpus-sized mention frame here).
-            # All arithmetic below is surface-cardinality until the ONE
-            # final join back onto mentions.
-            surf_comp = comps.join(
-                surfaces_t.where("is_mention").select(
-                    F.col("id").alias("node"),
-                    F.col("text").alias("mention"),
-                    "surf_min",
-                ),
-                "node",
-            ).select("mention", "component", "surf_min")
-            cmin = surf_comp.groupBy("component").agg(
-                F.min("surf_min").alias("cluster_id")
+            # mentions of unlinked surfaces have no edges (singletons, the
+            # reference's no-prediction case, FIXTURES F5). link_best emits
+            # at most ONE entity per surface, so the graph is a star forest:
+            # a component is one entity `b` with its linked surfaces, and
+            # cluster_id = min mention id over the component = min over its
+            # surfaces of surf_min (computed in the groupBy that
+            # deduplicates surfaces and carried through the links stage).
+            # star_components labels every link with that min in ONE window
+            # over `links`; the only mention-cardinality work is the final
+            # join back onto mentions.
+            surf_cluster = star_components(links, hub="b", label="surf_min").select(
+                F.col("surf_text").alias("mention"),
+                F.col("component").alias("cluster_id"),
             )
-            # surface -> cluster map (distinct-surface cardinality, small
-            # relative to mentions; no explicit broadcast hint — unbounded
-            # at 10^12 turns, AQE picks the strategy within the threshold)
-            surf_cluster = surf_comp.join(cmin, "component").select(
-                "mention", "cluster_id"
-            )
-            # NB: entity-anchor components never leak in: component ids are
-            # remapped to min *mention* id above; mentions of unlinked
-            # surfaces coalesce to themselves (FIXTURES F5 singletons)
             return m_slim.join(surf_cluster, "mention", "left").select(
                 F.col("mention_id").alias("node"),
                 F.coalesce(F.col("cluster_id"), F.col("mention_id")).alias(

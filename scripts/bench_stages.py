@@ -5,7 +5,7 @@ re-derivable artifact, not an in-session claim).
 
 Protocol (same discipline as bench_scaling.py):
 * inputs are PRE-MATERIALIZED once to tmpfs parquet — the surfaces node
-  table (id, text, is_mention, vec, tk) and the candidate-pair table
+  table (id, text, is_mention, surf_min, tk) and the candidate-pair table
   (a, b) exactly as the pipeline's checkpoints would hold them;
 * each TRIAL is a fresh JVM; levels are interleaved; per-JVM warmup runs
   a small end-to-end chain first (JIT + codegen + Python UDF workers);
@@ -13,8 +13,8 @@ Protocol (same discipline as bench_scaling.py):
   counted), so the number is that stage's cost alone:
     - candidates_sec: blocking keys + purge + key join + top-k budget,
       from the surfaces table;
-    - links_sec: two-phase scoring + argmax link + surface-text join,
-      from the candidate pairs.
+    - links_sec: two-phase scoring + argmax link, from the candidate
+      pairs.
 
 Usage: python scripts/bench_stages.py [n_convs] [tpc] [lo] [hi]
 Env: SPARK_GRAFT_ENTITIES (default 20000), SPARK_GRAFT_TRIALS (default 3).
@@ -32,15 +32,10 @@ import sys
 GEN = r"""
 import os, sys
 os.makedirs("/dev/shm/spark-local", exist_ok=True)
-from pyspark.sql import functions as F
 from blink_reloaded_spark.session import get_spark
 from blink_reloaded_spark import datagen
-from blink_reloaded_spark.plans.pipeline import (
-    LinkagePipeline, ENTITY_ID_OFFSET,
-)
+from blink_reloaded_spark.plans.pipeline import LinkagePipeline
 from blink_reloaded_spark.operators.mentions import extract_mentions
-from blink_reloaded_spark.functions.embedding import hashed_embedding_udf
-from blink_reloaded_spark.functions.text import tokens
 
 n_convs = int(sys.argv[1]); tpc = int(sys.argv[2]); n_entities = int(sys.argv[3])
 out = sys.argv[4]
@@ -53,23 +48,12 @@ tr, _ = datagen.generate_transcripts(spark, cat, n_convs=n_convs,
 surfaces = [a["surface"] for a in cat.aliases]
 m = extract_mentions(tr.select("conv_id", "turn_idx", "text"), surfaces,
                      with_context=False)
-ment_surf = (
-    m.select(F.col("mention").alias("text")).distinct()
-    .select(F.xxhash64(F.lit("surf"), "text").alias("id"), "text",
-            F.lit(True).alias("is_mention"))
-)
-ent_surf = cat.entities_df(spark).select(
-    (F.lit(ENTITY_ID_OFFSET) - F.col("entity_id")).alias("id"),
-    F.lower(F.col("title")).alias("text"), F.lit(False).alias("is_mention"),
-)
-surfaces_t = (
-    ment_surf.unionByName(ent_surf)
-    .withColumn("vec", hashed_embedding_udf(F.col("text")))
-    .withColumn("tk", tokens(F.col("text")))
+pipe = LinkagePipeline.tuned(spark, n_entities, collect_metrics=False)
+surfaces_t = pipe.build_surfaces_from(
+    m.select("mention_id", "mention"), cat.entities_df(spark)
 )
 surfaces_t.write.mode("overwrite").parquet(out + "/surfaces")
 
-pipe = LinkagePipeline.tuned(spark, n_entities, collect_metrics=False)
 surf_ck = spark.read.parquet(out + "/surfaces").localCheckpoint()
 cands = pipe.build_candidates_from(surf_ck)
 cands.write.mode("overwrite").parquet(out + "/cands")
@@ -141,7 +125,8 @@ if os.environ.get("SPARK_GRAFT_SUBSTAGES"):
     sub["noop_cands"] = round(time.time() - t0, 2)
     t0 = time.time()
     scored = two_phase_scored_pairs(cands, surfaces_t,
-                                    threshold=pipe.threshold)
+                                    threshold=pipe.threshold,
+                                    cos_source=pipe.cos_source)
     scored.write.format("noop").mode("overwrite").save()
     sub["scored"] = round(time.time() - t0, 2)
     t0 = time.time()

@@ -1,20 +1,25 @@
 #!/usr/bin/env python
 """Package blink_reloaded_spark for `spark-submit --py-files` (north_rule
-packaging requirement). Produces dist/blink_reloaded_spark.zip containing the
-package (pure Python, no build step)."""
+packaging requirement): a zip of the package's .py files (pure Python, no
+build step).
+
+    python scripts/make_pyfiles_zip.py [OUT]   # default dist/blink_reloaded_spark.zip
+
+Prints the path of the written zip."""
 
 from __future__ import annotations
 
 import os
+import sys
 import zipfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DEFAULT_OUT = os.path.join(ROOT, "dist", "blink_reloaded_spark.zip")
 
 
-def main() -> str:
-    dist = os.path.join(ROOT, "dist")
-    os.makedirs(dist, exist_ok=True)
-    out = os.path.join(dist, "blink_reloaded_spark.zip")
+def main(out: str = DEFAULT_OUT) -> str:
+    out = os.path.abspath(out)
+    os.makedirs(os.path.dirname(out), exist_ok=True)
     pkg = os.path.join(ROOT, "blink_reloaded_spark")
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
         for dirpath, _dirs, files in os.walk(pkg):
@@ -29,4 +34,4 @@ def main() -> str:
 
 
 if __name__ == "__main__":
-    main()
+    main(*sys.argv[1:2])

@@ -7,6 +7,8 @@ from __future__ import annotations
 import random
 from collections import defaultdict
 
+from pyspark.sql import functions as F
+
 from blink_reloaded_spark.operators.clustering import connected_components
 
 
@@ -104,6 +106,48 @@ def test_star_components_equals_generic_cc(spark):
              for h in hubs for _ in range(rng.randrange(1, 6))]
     edges = list({(a, h) for a, h in edges if a not in set(hubs)})
     e = spark.createDataFrame(edges, "src long, dst long")
-    fast = sorted(map(tuple, star_components(e).collect()))
-    slow = sorted(map(tuple, connected_components(e).collect()))
+    # label = the leaf id: each edge's component must be the min leaf id of
+    # its generic-CC component
+    fast = sorted(
+        map(tuple, star_components(e, hub="dst", label="src").collect())
+    )
+    cc = dict(map(tuple, connected_components(e).collect()))
+    leaf_min: dict = {}
+    for a, _ in edges:
+        leaf_min[cc[a]] = min(a, leaf_min.get(cc[a], a))
+    slow = sorted((a, h, leaf_min[cc[a]]) for a, h in edges)
     assert fast == slow
+    assert len({c for _, _, c in fast}) == len({h for _, h in edges})
+
+
+def test_local_path_gated_on_edge_count(spark, monkeypatch):
+    """The single-task union-find is gated on the edge count, not on the
+    derived partition count: at defaultParallelism=1 every graph sizes to
+    one partition, and a graph past the one-task size must still take the
+    distributed loop."""
+    from pyspark import SparkContext
+
+    from blink_reloaded_spark.operators import clustering
+
+    # past the 50k-edge one-partition sizing; at defaultParallelism=1 it
+    # still sizes to one partition
+    n_hubs, n_edges = 50, 60_000
+    e = spark.range(n_hubs, n_hubs + n_edges).select(
+        F.col("id").alias("src"), (F.col("id") % n_hubs).alias("dst")
+    )
+    calls = []
+    local = clustering._local_components
+
+    def spy(frame):
+        calls.append(1)
+        return local(frame)
+
+    monkeypatch.setattr(clustering, "_local_components", spy)
+    monkeypatch.setattr(
+        SparkContext, "defaultParallelism", property(lambda self: 1)
+    )
+    comps = connected_components(e)
+    got = comps.groupBy("component").agg(F.count("*").alias("n")).collect()
+    assert not calls, "a 60k-edge graph took the one-task path"
+    assert sorted(r["component"] for r in got) == list(range(n_hubs))
+    assert sum(r["n"] for r in got) == n_hubs + n_edges

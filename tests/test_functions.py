@@ -167,6 +167,21 @@ def test_minhash_numpy_kernel_parity(spark):
     assert got == ref
 
 
+def test_minhash_numpy_kernel_rejects_unproven_params():
+    """The numpy MinHash kernel is exact only for k <= 9 (int64 Horner
+    hash with one final % P) and num_hashes <= len(PERMS) (past that the
+    signature columns would stay uninitialized): outside that range the
+    factory must raise, not return wrong signatures."""
+    import pytest
+
+    from blink_reloaded_spark.functions.hashing import PERMS, minhash_sigs_np_udf
+
+    for k, nh in ((10, 18), (0, 18), (5, len(PERMS) + 1), (5, 0)):
+        with pytest.raises(ValueError, match="minhash_sigs_np_udf"):
+            minhash_sigs_np_udf(k, nh)
+    minhash_sigs_np_udf(9, len(PERMS))  # the edge of the range is accepted
+
+
 def test_sig_agreement_flat_equals_lambda(spark):
     """r8: the unrolled codegen agreement must equal the zip_with form."""
     import random as _r

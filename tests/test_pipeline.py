@@ -192,6 +192,50 @@ def test_cos_recompute_parity(spark, fixture):
         two_phase_scored_pairs(cands, nodes, cos_source="typo")
 
 
+def test_fused_scorer_link_parity_both_prune_modes(spark, fixture):
+    """The recompute path's fused jw/cos UDF computes cos only where the
+    cheap score passes the THRESHOLD bound; with argmax_prune=True the JVM
+    filter's bound is higher, so the mask stays a superset there too.
+    link_best over the fused scorer must equal link_best over the
+    stored-vector path in both prune modes, on all pairs."""
+    from blink_reloaded_spark.functions.embedding import hashed_embedding_udf
+    from blink_reloaded_spark.functions.text import tokens
+    from blink_reloaded_spark.operators.scoring import (
+        link_best,
+        two_phase_scored_pairs,
+    )
+
+    cat, tr, me = fixture
+    nodes = (
+        me.select(F.lower(F.col("mention")).alias("text"))
+        .distinct()
+        .limit(120)
+        .select(
+            F.xxhash64("text").alias("id"),
+            "text",
+            hashed_embedding_udf(F.col("text")).alias("vec"),
+            tokens(F.col("text")).alias("tk"),
+        )
+        .localCheckpoint()
+    )
+    ids = nodes.select("id")
+    cands = (
+        ids.withColumnRenamed("id", "a")
+        .crossJoin(ids.withColumnRenamed("id", "b"))
+        .where(F.col("a") != F.col("b"))
+        .localCheckpoint()
+    )
+    for argmax_prune in (True, False):
+        got, want = (
+            sorted(map(tuple, link_best(two_phase_scored_pairs(
+                cands, nodes, threshold=0.6, argmax_prune=argmax_prune,
+                cos_source=src,
+            ), 0.6).collect()))
+            for src in ("recompute", "join")
+        )
+        assert got and got == want, argmax_prune
+
+
 def test_reliable_checkpoint_mode(spark, fixture, tmp_path):
     """checkpoint_mode='reliable' (RDD checkpoint dir — the cluster setting;
     localCheckpoint pins executor memory and dies with the executor) must

@@ -66,7 +66,11 @@ def test_assume_partitioned_no_exchange_before_feature_udfs(spark):
     """VERDICT r5 #4: two_phase_scored_pairs(assume_partitioned=True) relies
     on the caller's frame being physically hash(a)-partitioned (the pipeline
     materializes the candidates stage with localCheckpoint, which preserves
-    physical partitions). Pin BOTH halves of the invariant:
+    physical partitions). The flag promises co-location, not width: the
+    pipeline's candidates shuffle is repartition("a") (REPARTITION_BY_COL),
+    which AQE coalesces — to one partition at small sizes — and the scorer
+    then runs at that width. This test fixes the width with
+    repartition(8, "a"). Pin BOTH halves of the invariant:
     (1) localCheckpoint keeps hash(a) co-location — every `a` lands in one
         partition after the round-trip;
     (2) with the flag set, NO shuffle exchange sits between the candidates
@@ -129,3 +133,53 @@ def test_wholestage_codegen_in_text_kernels(spark):
     for name in ("text03_fingerprint", "dedup04_simhash", "multimodal01_metadata"):
         plan = _plan(spark, name)
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, name
+
+
+# Spark jobs one LinkagePipeline.run(surfaces=...) plus count() starts on the
+# fixture below (local[8]), with one fused scorer UDF, candidate keying
+# materialized once and a one-window cluster tail.
+LINK_JOB_BUDGET = 18
+
+
+def test_link_pipeline_plan_budget(spark):
+    """The KB pipeline's per-op fixed cost is mostly jobs and Python UDF
+    passes: pin the job count of one run + count() (job group + status
+    tracker), and exactly ONE ArrowEvalPython node in the executed links
+    plan (the fused jw/cos scorer; JW-then-cos was two)."""
+    from blink_reloaded_spark import datagen
+    from blink_reloaded_spark.operators.mentions import extract_mentions
+    from blink_reloaded_spark.plans.pipeline import LinkagePipeline
+
+    cat = datagen.EntityCatalog.build(n_entities=50)
+    tr, _ = datagen.generate_transcripts(
+        spark, cat, n_convs=50, turns_per_conv=10, hot_conv_factor=10
+    )
+    tr = tr.localCheckpoint()
+    ents = cat.entities_df(spark)
+    surfaces = [a["surface"] for a in cat.aliases]
+
+    sc = spark.sparkContext
+    group = "test_link_pipeline_plan_budget"
+    sc.setJobGroup(group, group)
+    try:
+        LinkagePipeline(spark, collect_metrics=False).run(
+            tr, ents, surfaces=surfaces
+        ).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= LINK_JOB_BUDGET, n_jobs
+
+    pipe = LinkagePipeline(spark, collect_metrics=False)
+    m = extract_mentions(tr, surfaces, with_context=False)
+    surf = pipe.build_surfaces_from(
+        m.select("mention_id", "mention"), ents
+    ).localCheckpoint()
+    cands = pipe.build_candidates_from(surf).localCheckpoint()
+    links = pipe.build_links_from(cands, surf, assume_partitioned=True)
+    assert len(links.collect()) > 0
+    plan = links._jdf.queryExecution().executedPlan()
+    if "AdaptiveSparkPlan" in plan.nodeName():
+        plan = plan.finalPhysicalPlan()
+    assert plan.toString().count("ArrowEvalPython") == 1, plan.toString()

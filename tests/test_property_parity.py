@@ -53,6 +53,51 @@ def test_minhash_sql_monotone_under_identity(s: str):
     assert v1 == v2
 
 
+# BMP text without surrogates: the scorer kernels' proven domain
+bmp_st = st.text(
+    alphabet=st.characters(max_codepoint=0xFFFF, blacklist_categories=("Cs",)),
+    max_size=30,
+)
+unit_st = st.floats(0.0, 1.0, allow_nan=False)
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    rows=st.lists(st.tuples(bmp_st, bmp_st, unit_st, unit_st), max_size=12),
+    lo=unit_st,
+)
+def test_fused_jw_cos_kernel_parity(rows, lo):
+    """The fused scorer kernel (one UDF pass for jw and the survivors' cos)
+    must return exactly the values of the unfused paths: jw =
+    round(jaro_winkler_np, 6) on every row, and cos = the stored-vector
+    path (hashed_embedding_udf rows, dot_product_udf's float64 einsum) on
+    every row whose cheap score passes the bound."""
+    from blink_reloaded_spark.functions.embedding import (
+        dot_product_udf,
+        hashed_embedding_udf,
+    )
+    from blink_reloaded_spark.operators.scoring import (
+        W_JW,
+        W_LEV,
+        W_OVL,
+        jw_cos_np,
+    )
+
+    a = pd.Series([r[0] for r in rows], dtype=object)
+    b = pd.Series([r[1] for r in rows], dtype=object)
+    lev = np.array([r[2] for r in rows], dtype=np.float64)
+    ovl = np.array([r[3] for r in rows], dtype=np.float64)
+    jw, cos = jw_cos_np(a, b, lev, ovl, lo)
+    assert np.array_equal(jw, np.round(jaro_winkler_np(a, b), 6))
+    past = np.flatnonzero(jw * W_JW + lev * W_LEV + ovl * W_OVL >= lo)
+    embed = hashed_embedding_udf.func
+    want = dot_product_udf.func(
+        embed(a.iloc[past].reset_index(drop=True)),
+        embed(b.iloc[past].reset_index(drop=True)),
+    ).to_numpy()
+    assert np.array_equal(cos[past], want), (cos[past], want)
+
+
 # ---------------------------------------------------------------------------
 # matcher-implementation parity: vec == loop == regex on random inputs
 # ---------------------------------------------------------------------------

@@ -12,8 +12,13 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_spark_submit_pyfiles(tmp_path):
+    # build into tmp_path: the test must not rewrite the tracked dist/ zip
     zip_out = subprocess.run(
-        [sys.executable, os.path.join(ROOT, "scripts", "make_pyfiles_zip.py")],
+        [
+            sys.executable,
+            os.path.join(ROOT, "scripts", "make_pyfiles_zip.py"),
+            str(tmp_path / "blink_reloaded_spark.zip"),
+        ],
         capture_output=True,
         text=True,
         check=True,
